@@ -9,7 +9,8 @@ instead of recomputing. Our version:
   no Iceberg jars, so the writer abstracts over plain partitioned parquet)
 * a ``manifest.json`` records: stage name, a **fingerprint** (hash of the
   stage's parameters + its upstream manifests' fingerprints — a lineage
-  chain), row count, per-partition row counters, schema, wall time
+  chain), row count, per-file row counters (read from the parquet
+  footers on the driver — no Spark job), schema, wall time
 * on resume, a stage whose manifest exists with a matching fingerprint is
   loaded from parquet (lineage-truncated, like the reference reloading an
   NPZ); any parameter or upstream change invalidates the fingerprint and
@@ -30,6 +31,7 @@ from hashlib import sha256
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kgspark.hashing import phash32
 
@@ -43,6 +45,24 @@ def with_salt(df: DataFrame, cols: list[str], buckets: int = 16,
                                           F.lit(buckets)).cast("int"))
 
 
+def _file_rows(data_dir: str) -> list[dict]:
+    """Per-file row counters of a written parquet dir, read from the
+    footers on the driver (no Spark job); files without rows are left
+    out. Sorted by path relative to ``data_dir``."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for root, _dirs, files in os.walk(data_dir):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                path = os.path.join(root, f)
+                n = pq.read_metadata(path).num_rows
+                if n:
+                    out.append({"file": os.path.relpath(path, data_dir),
+                                "rows": n})
+    return sorted(out, key=lambda x: x["file"])
+
+
 class Checkpointer:
     """Stage-level checkpoint/resume driver."""
 
@@ -51,6 +71,7 @@ class Checkpointer:
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
         self._fingerprints: dict[str, str] = {}
+        self.rows: dict[str, int] = {}  # stage → row count (from manifests)
         self.events: list[dict] = []  # audit of hits/recomputes this run
 
     # ------------------------------------------------------------- internals
@@ -101,8 +122,11 @@ class Checkpointer:
         m = self._read_manifest(name)
         data_dir = os.path.join(self._dir(name), "data")
         if m is not None and m.get("fingerprint") == fp and os.path.isdir(data_dir):
+            self.rows[name] = m["rows"]
             self.events.append({"stage": name, "action": "resume", "rows": m["rows"]})
-            return self.spark.read.parquet(data_dir)
+            # the known schema: inferring it would cost a Spark job
+            return self.spark.read.schema(
+                StructType.fromJson(m["schema"])).parquet(data_dir)
 
         t0 = time.time()
         # Crash-safe ordering: a manifest must never describe data it did
@@ -125,26 +149,23 @@ class Checkpointer:
         shutil.rmtree(data_dir, ignore_errors=True)
         os.rename(tmp_dir, data_dir)
 
-        out = self.spark.read.parquet(data_dir)
-        # per-partition lineage counters (file-level row counts)
-        abs_data = os.path.abspath(data_dir)
-        per_part = []
-        for r in (out.groupBy(F.input_file_name().alias("file"))
-                  .agg(F.count("*").alias("rows")).collect()):
-            fname = r["file"]
-            fname = fname.removeprefix("file://").removeprefix("file:")
-            per_part.append({"file": os.path.relpath(fname, abs_data),
-                             "rows": r["rows"]})
-        rows = sum(p["rows"] for p in per_part)
+        # read back with the written schema (partition columns come back
+        # last; reading makes every field nullable)
+        part = partition_by or []
+        out = self.spark.read.schema(StructType(
+            [f for f in df.schema if f.name not in part]
+            + [df.schema[c] for c in part])).parquet(data_dir)
+        per_part = _file_rows(data_dir)
+        rows = self.rows[name] = sum(p["rows"] for p in per_part)
         manifest = {
             "stage": name,
             "fingerprint": fp,
             "params": params,
             "deps": deps,
             "rows": rows,
-            "partitions": sorted(per_part, key=lambda x: x["file"]),
+            "partitions": per_part,
             "schema": out.schema.jsonValue(),
-            "partition_by": partition_by or [],
+            "partition_by": part,
             "wall_sec": round(time.time() - t0, 3),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
@@ -203,7 +224,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, workdir: str,
         deps=["triples", "entities", "relations"],
     )
 
-    n_entities = ents.count()
+    n_entities = ck.rows["entities"]
     noisy = ck.stage(
         "noisy_facts",
         lambda: enc.select("s", "p", "o", F.lit(False).alias("is_error"))
@@ -219,7 +240,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, workdir: str,
         # path metadata is cheap to re-derive; the fitted models get their
         # own persisted stage (S6 model sink — reference pickles models,
         # patybred.py:630-655; ours are a small parquet table)
-        idx = pb.enumerate_paths(facts, rels.count())
+        idx = pb.enumerate_paths(facts, ck.rows["relations"])
         models = ck.stage(
             "models", lambda: pb.fit_models(facts, idx, types, n_entities),
             params={"method": method}, deps=["noisy_facts", "types"])
@@ -257,6 +278,6 @@ def run_pipeline(spark: SparkSession, sf_dir: str, workdir: str,
         repaired = ck.stage(
             "repaired", lambda: correct.apply_corrections(facts, corr),
             deps=["corrections"], partition_by=["p"])
-        out["n_corrections"] = corr.count()
-        out["n_repaired_facts"] = repaired.count()
+        out["n_corrections"] = ck.rows["corrections"]
+        out["n_repaired_facts"] = ck.rows["repaired"]
     return out

@@ -16,8 +16,8 @@ Spark re-expression — everything is joins, no driver-side loop over
 suspects:
 
 * name candidates: SymSpell delete-variant blocking over normalized
-  entity names + exact Damerau-Levenshtein verify (the same J8 machinery
-  as kgspark.link) — one variant self-join, symmetric output;
+  entity names + exact OSA Damerau-Levenshtein verify in the JVM
+  (``osa_within2``) — one variant self-join, symmetric output;
 * range filter: the induced per-relation range (scoring.domran_model,
   side='o') semi-joined against the candidate's types;
 * re-score: SDValidate is f(p, types(o)), so corrected-triple scores are
@@ -35,11 +35,9 @@ rest of the suspect set, the reference's repair semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from kgspark.link import damerau_levenshtein_nodup
 
 MAX_DIST = 2
 MIN_SCORE = 0.05
@@ -82,6 +80,30 @@ def _shared_ran_dist(facts: DataFrame, types: DataFrame, conf: float):
     return ran, dist
 
 
+def osa_within2(a: str, b: str) -> Column:
+    """OSA Damerau-Levenshtein (``link.osa_distance``) of two string
+    columns whose Levenshtein distance is at most 2 — true of every pair
+    the delete-variant blocking emits, since both names are at most one
+    delete away from a shared variant.
+
+    On such pairs OSA equals Levenshtein, except that it is 1 where
+    Levenshtein is 2 and the names differ by one swap of adjacent
+    characters (OSA is at most 1 only for equal strings, one edit or one
+    transposition). Plain JVM expressions: no Python worker round trip.
+    """
+    x, y = F.col(a), F.col(b)
+    lev = F.levenshtein(x, y)
+
+    def swapped_at(i: Column) -> Column:
+        return F.concat(x.substr(F.lit(1), i - 1), x.substr(i + 1, F.lit(1)),
+                        x.substr(i, F.lit(1)),
+                        x.substr(i + 2, F.length(x))) == y
+
+    swap = ((lev == 2) & (F.length(x) == F.length(y))
+            & F.exists(F.sequence(F.lit(1), F.length(x) - 1), swapped_at))
+    return F.when(swap, F.lit(1)).otherwise(lev)
+
+
 def auto_max_bucket(n_entities: int) -> int:
     """Scale-default SymSpell hot-bucket cap: max(64, 8·⌈log2 n⌉).
 
@@ -107,7 +129,8 @@ def name_candidates(entities: DataFrame, max_dist: int = MAX_DIST,
 
     SymSpell distance-1 delete variants block the candidates (recall 1.0
     at DL ≤ 1, partial at 2 — the standard SymSpell trade; the DuckDB
-    oracle shares the exact blocking); exact DL verifies ≤ max_dist.
+    oracle shares the exact blocking); exact OSA DL (:func:`osa_within2`)
+    verifies ≤ max_dist.
 
     ``max_bucket`` drops delete-variant buckets with more members than
     the cap BEFORE the self-join — the standard SymSpell guard against
@@ -151,13 +174,8 @@ def name_candidates(entities: DataFrame, max_dist: int = MAX_DIST,
         l.join(r, "var").where(F.col("a") != F.col("b"))
         .select("a", "b", "na", "nb").distinct()
     )
-    # spread the CPU-bound DP verify: the distinct's output is a few MB,
-    # which AQE coalesces to one partition — a single Python worker would
-    # then run every edit-distance computation serially
-    from kgspark.util import shuffle_parts
-    cand = cand.repartition(shuffle_parts(cand))
     pairs = (
-        cand.withColumn("dist", damerau_levenshtein_nodup("na", "nb"))
+        cand.withColumn("dist", osa_within2("na", "nb"))
         .where(F.col("dist") <= max_dist)
         .select("a", "b", "dist")
     )

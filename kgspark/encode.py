@@ -4,30 +4,21 @@ Reference analog: the two-pass dictionary build at
 /root/reference/load_kb.py:56-97 assigns ids in first-seen order — not
 reproducible under parallelism. We instead assign ``row_number() over
 (order by portable_hash(name), name)`` (1-based): deterministic,
-partition-invariant, oracle-expressible, and computed WITHOUT a
-single-partition global window:
-
-  1. bucket = the hash's top bits (monotone in the sort key and UNIFORM —
-     a name-prefix bucket would collapse to a handful of skewed buckets
-     because entity names share prefixes like ``file:``);
-  2. row_number within bucket (parallel, ~|names|/1024 per bucket);
-  3. bucket offsets = cumulative counts over the 1024-row histogram,
-     computed on the driver and broadcast-joined back.
-
-This is the scalable zipWithIndex pattern in pure DataFrame ops, so it
-survives a 1000-executor / 10^12-row dimension.
+partition-invariant and oracle-expressible. ``dense_ids`` is that
+ordinal computed by ``kgspark.ordering.global_ordinal``, so it takes the
+same strategy choice as every other ordinal: one task over the
+checkpointed distinct-name table when its stored size is at most
+``spark.sql.autoBroadcastJoinThreshold``, otherwise the range-partitioned
+pattern that survives a 10^12-row dimension.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kgspark.hashing import phash32, sql_phash32
-
-N_ID_BUCKETS = 1024
-_BUCKET_SHIFT = 22  # 2^32 / 2^22 = 1024 buckets
+from kgspark.ordering import global_ordinal
 
 
 def _id_order_sql(name_sql: str = "name") -> str:
@@ -39,34 +30,10 @@ def dense_ids(names: DataFrame, name_col: str = "name",
               id_col: str = "id") -> DataFrame:
     """Distinct single-column DataFrame → (id, name), 1-based dense ids
     ranked by (portable_hash(name), name)."""
-    from kgspark.util import materialize
-
-    # checkpoint the distinct-names table: it feeds BOTH the histogram
-    # collect and the final ranked projection (separate actions — nothing
-    # is reused across them otherwise, so the distinct shuffle of the
-    # dimension would run twice)
-    b = materialize(
-        names.select(F.col(name_col)).distinct()
-        .withColumn("_h", phash32([F.col(name_col)], "ids"))
-        .withColumn("_b", F.shiftright("_h", _BUCKET_SHIFT))
-    )
-    hist = [(r["_b"], r["cnt"]) for r in
-            b.groupBy("_b").agg(F.count("*").alias("cnt")).collect()]
-    hist.sort(key=lambda x: x[0])
-    offsets, acc = [], 0
-    for bucket, cnt in hist:
-        offsets.append((bucket, acc))
-        acc += cnt
-    spark = names.sparkSession
-    off_df = spark.createDataFrame(offsets, "`_b` long, `_off` long")
-
-    w = Window.partitionBy("_b").orderBy("_h", name_col)
-    return (
-        b.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(off_df), "_b")
-        .select((F.col("_off") + F.col("_rn")).cast("long").alias(id_col),
-                F.col(name_col))
-    )
+    d = (names.select(F.col(name_col)).distinct()
+         .withColumn("_h", phash32([F.col(name_col)], "ids")))
+    return global_ordinal(d, ["_h", name_col], out=id_col) \
+        .select(id_col, name_col)
 
 
 def build_dims(triples_raw: DataFrame) -> tuple[DataFrame, DataFrame]:

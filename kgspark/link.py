@@ -286,14 +286,6 @@ def damerau_levenshtein_udf(a, b):
                      dtype="int32")
 
 
-# Non-deterministic-marked copy for call sites that FILTER on the UDF
-# output: the optimizer otherwise pushes the filter below the upstream
-# distinct and re-evaluates the UDF above it — two ArrowEvalPython nodes,
-# every pair paying the DP twice (guide §4.4). The function is pure; the
-# marking only pins a single evaluation site.
-damerau_levenshtein_nodup = damerau_levenshtein_udf.asNondeterministic()
-
-
 def dl_pairs(triples_raw: DataFrame, prefix: str = "module:") -> DataFrame:
     """LSH candidate pairs annotated with exact Damerau-Levenshtein (F4)."""
     m = normalize_mentions(triples_raw, prefix)

@@ -1352,13 +1352,6 @@ def relation_support_sql(triples_cte: str) -> str:
             "SELECT p, count(*) AS support FROM enc GROUP BY p")
 
 
-def symmetric_relations_sql(triples_cte: str, R: int = R_CONST) -> str:
-    from kgspark.typesys import kg_ctes
-
-    return (f"WITH {kg_ctes(triples_cte)}, {paths_ctes(R)} "
-            "SELECT p FROM syms")
-
-
 def negatives_ctes(R: int = R_CONST, cap: int = MAX_POS_TRAIN,
                    rel: str = "enc", with_ne: bool = True) -> str:
     """CTE chain after kg_ctes: pos (capped positives), negs.

@@ -15,10 +15,14 @@ Reference semantics:
   (recall=0, precision=1) endpoint — exactly sklearn's
   auc(r, p) over precision_recall_curve output (the reference's PRAUC).
 
-Scale: no unpartitioned windows anywhere — the filtered rank uses the
-range-partitioned global ordinal and the AUC cumsums use the two-phase
-per-partition-prefix + broadcast-offset pattern (kgspark.ordering), so
-every stage stays parallel at any error-subset size.
+Scale: the filtered rank is a global ordinal over the error subset and
+the AUC running sums are global cumsums over the distinct-score groups,
+both from kgspark.ordering. Each call picks its own strategy: one task
+(``coalesce(1)`` + window) when the checkpointed input's stored size is
+at most ``spark.sql.autoBroadcastJoinThreshold``, otherwise the
+range-partitioned per-partition-prefix + broadcast-offset pattern, so
+no stage serializes on one partition at scale. Both strategies give
+identical ranks.
 """
 
 from __future__ import annotations
@@ -40,25 +44,13 @@ def rank_facts_average(scored: DataFrame, score_col: str = "score") -> DataFrame
     (``rankdata(scores)``): every member of a tie group gets the mean of
     the ordinal ranks the group spans. Two-phase: cumulative counts over
     the distinct-score groups (global_cumsum), then a join back — no
-    per-row window, no single partition."""
+    per-row window over the full fact table."""
     g = scored.groupBy(score_col).agg(F.count("*").alias("c"))
     g = global_cumsum(g, [score_col], ["c"])
     g = g.select(score_col,
                  (F.col("cum_c") - F.col("c") + (F.col("c") + 1) / 2.0)
                  .alias("rank"))
     return scored.join(g, score_col).select(*scored.columns, "rank")
-
-
-def rank_average_sql(scored_cte: str, round_to: int = 6) -> str:
-    """Oracle for rank_facts_average over a (s,p,o,score) CTE."""
-    return f"""
-WITH sc AS ({scored_cte}),
-g AS (SELECT score, count(*) AS c FROM sc GROUP BY score),
-cg AS (SELECT score, c, sum(c) OVER (ORDER BY score) AS cum_c FROM g),
-rk AS (SELECT score, cum_c - c + (c + 1) / 2.0 AS rank FROM cg)
-SELECT sc.s, sc.p, sc.o, round(sc.score, {round_to}) AS score, rk.rank
-FROM sc JOIN rk ON rk.score = sc.score
-"""
 
 
 def evaluate(ranked: DataFrame, flag_col: str = "is_error") -> DataFrame:
@@ -139,21 +131,12 @@ def auc_metrics(scored: DataFrame, flag_col: str = "is_error",
         ).alias("pr_auc"),
     ]
     if with_n_facts:
-        aggs.append(F.sum("c").cast("long").alias("n_facts"))
+        aggs.append(F.coalesce(F.sum("c"), F.lit(0)).cast("long")
+                    .alias("n_facts"))
     return g.agg(*aggs)
 
 
 # ---------------------------------------------------------------- SQL (oracle)
-
-
-def rank_sql(scored_cte: str, round_to: int = 6) -> str:
-    """Oracle: ordinal rank over a (s,p,o,score) CTE."""
-    return f"""
-WITH sc AS ({scored_cte})
-SELECT s, p, o, round(score, {round_to}) AS score,
-       CAST(row_number() OVER (ORDER BY score, s, p, o) AS BIGINT) AS rank
-FROM sc
-"""
 
 
 def evaluate_sql(flagged_cte: str, round_to: int = 6) -> str:

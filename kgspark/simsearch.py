@@ -539,11 +539,6 @@ def _probes_cte(band_planes: int = BAND_PLANES) -> str:
     return f"flips(f) AS (VALUES {vals})"
 
 
-def lsh_buckets_sql(n_bands: int = N_BANDS, band_planes: int = BAND_PLANES) -> str:
-    return (f"WITH {_buckets_cte(n_bands, band_planes)} "
-            "SELECT vec_id, band, key FROM eb")
-
-
 def _oracle_planes(band_planes: int | None) -> int:
     """Mirror of the Spark-side auto default for oracle SQL strings: read
     the corpus size of the dataset the driver compares at (one DuckDB

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import duckdb
 import pytest
 
@@ -18,6 +20,17 @@ def spark():
     s = get_spark("kgspark-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@contextmanager
+def conf_set(spark, key: str, value: str):
+    """Set one session conf for the block, then restore it."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 class _OracleConn:

@@ -108,6 +108,32 @@ def test_manifest_contents(spark, tmp_path):
     assert m["partition_by"] == ["p"]
 
 
+def test_manifest_matches_spark_scan(spark, tmp_path):
+    """Footer row counters and the recorded schema equal what a Spark
+    scan of the written stage reports, per file, for a partitioned and
+    an unpartitioned stage (empty files are left out, as Spark has no
+    rows for them)."""
+    wd = str(tmp_path / "ck")
+    ck = Checkpointer(spark, wd)
+    df = spark.range(50).select(
+        F.col("id").alias("s"), (F.col("id") % 3).cast("int").alias("p"),
+        F.array("id").alias("arr")).repartition(4)
+    ck.stage("t", lambda: df, partition_by=["p"])
+    ck.stage("u", lambda: df.where(F.col("s") < 3).repartition(8))
+    for name, rows in (("t", 50), ("u", 3)):
+        data = os.path.join(wd, name, "data")
+        m = json.load(open(os.path.join(wd, name, MANIFEST_NAME())))
+        scan = spark.read.parquet(data)
+        assert m["schema"] == scan.schema.jsonValue()
+        assert ck.rows[name] == m["rows"] == rows
+        per_file = {
+            os.path.relpath(r["f"].removeprefix("file:").removeprefix("//"),
+                            os.path.abspath(data)): r["n"]
+            for r in scan.groupBy(F.input_file_name().alias("f"))
+            .agg(F.count("*").alias("n")).collect()}
+        assert {x["file"]: x["rows"] for x in m["partitions"]} == per_file
+
+
 def MANIFEST_NAME():
     from kgspark.checkpoint import MANIFEST
     return MANIFEST

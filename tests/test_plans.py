@@ -12,9 +12,10 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from kgspark import correct, encode, extract, pipeline, rank, synth, textstats
-from tests.conftest import SF_TINY
+from tests.conftest import SF_TINY, conf_set
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -24,9 +25,10 @@ def _plan(df, mode: str = "formatted") -> str:
 
 
 def _tree(df) -> str:
-    """Just the operator tree (one line per node), no detail section."""
-    s = _plan(df)
-    return s.split("\n\n", 1)[0]
+    """The operator tree, one line per node WITH its arguments (`simple`
+    mode): the `formatted` tree prints a bare `Exchange (n)`, so an
+    `Exchange SinglePartition` probe on it could never fail."""
+    return _plan(df, "simple")
 
 
 def test_extract_plan_single_scan_no_python(spark):
@@ -78,13 +80,38 @@ def test_encode_broadcasts_dims_no_cartesian(spark):
 
 
 def test_rank_has_no_single_partition_exchange(spark):
-    """Global ordinal ranking uses the two-phase range/bucket pattern —
-    a naive global window would plan `Exchange SinglePartition`."""
+    """A naive global window would plan `Exchange SinglePartition`. The
+    small-input path coalesces the checkpointed leaf to one task
+    instead, so no exchange moves rows at all (the scalable path is
+    pinned by the test below)."""
     g = pipeline.build_graph(spark, SF_TINY)
     scores = g.triples.select(
         "s", "p", "o", (F.col("s") % 7 / 10.0).alias("score"))
+    naive = scores.withColumn("rank", F.row_number().over(
+        Window.orderBy("score", "s", "p", "o")))
+    assert "Exchange SinglePartition" in _tree(naive)  # probe sanity
     t = _tree(rank.rank_facts(scores))
     assert "Exchange SinglePartition" not in t
+    assert "Coalesce 1" in t
+
+
+def test_ordinals_take_range_path_when_broadcast_disabled(spark):
+    """With `spark.sql.autoBroadcastJoinThreshold=-1` rank_facts and
+    dense_ids take the scalable path: a window per range partition plus
+    the broadcast offset table — never one task, never a
+    single-partition exchange."""
+    g = pipeline.build_graph(spark, SF_TINY)
+    scores = g.triples.select(
+        "s", "p", "o", (F.col("s") % 7 / 10.0).alias("score"))
+    names = g.triples_str.select(F.col("subj").alias("name"))
+    with conf_set(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        plans = [_tree(rank.rank_facts(scores)),
+                 _tree(encode.dense_ids(names))]
+    for t in plans:
+        assert "Exchange SinglePartition" not in t
+        assert "Coalesce 1" not in t
+        assert "windowspecdefinition(_pid" in t
+        assert "BroadcastHashJoin" in t
 
 
 def test_transe_scale_mode_gradient_plan_has_no_collect_list(spark):

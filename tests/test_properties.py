@@ -101,3 +101,34 @@ def test_isolation_tree_leaves_tile_the_line(vals, p):
         for (lo, hi, h), (lo2, hi2, h2) in zip(leaves, leaves[1:]):
             assert hi == lo2  # contiguous, non-overlapping
         assert all(h >= 0 for _, _, h in leaves)
+
+
+@st.composite
+def _delete_variant_pairs(draw):
+    """Two names that share a distance-1 delete variant, the only pairs
+    correct.name_candidates blocks: each is the shared variant with at
+    most one character inserted."""
+    v = draw(st.text(alphabet="abc", max_size=6))
+
+    def grow():
+        if not draw(st.booleans()):
+            return v
+        i = draw(st.integers(0, len(v)))
+        return v[:i] + draw(st.sampled_from("abc")) + v[i:]
+
+    return grow(), grow()
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_delete_variant_pairs(), min_size=1, max_size=40))
+def test_osa_within2_matches_osa_on_blocked_pairs(spark, pairs):
+    from kgspark.correct import osa_within2
+    from kgspark.link import osa_distance
+
+    # plus fixed adjacent-swap cases, so every example covers the OSA=1,
+    # Levenshtein=2 branch
+    pairs = pairs + [("ab", "ba"), ("abc", "acb"), ("cab", "acb")]
+    got = spark.createDataFrame(pairs, "na string, nb string") \
+        .select("na", "nb", osa_within2("na", "nb").alias("d")).collect()
+    assert [(r["na"], r["nb"], r["d"]) for r in got] \
+        == [(a, b, osa_distance(a, b)) for a, b in pairs]

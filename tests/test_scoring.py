@@ -91,3 +91,23 @@ def test_global_ordinal_is_dense(spark, graph):
     n = r.count()
     got = r.agg(F.min("rank"), F.max("rank"), F.countDistinct("rank")).first()
     assert tuple(got) == (1, n, n)
+
+
+def test_evaluate_empty_input(spark, duck):
+    """evaluate() on an empty ranked table returns one row: zero counts
+    (n_facts was a NULL SUM before) and NULL averages — the oracle's
+    answer on the same empty input. Derived lineage, so every ordinal
+    inside checkpoints an empty leaf and takes the one-task path."""
+    from kgspark import ordering
+
+    ranked = spark.range(0).select(
+        F.col("id").alias("s"), F.col("id").cast("int").alias("p"),
+        F.col("id").alias("o"), (F.col("id") / 2.0).alias("score"),
+        F.col("id").alias("rank"), (F.col("id") > 0).alias("is_error"))
+    assert ordering._prepare(ranked)[1]
+    got = rank.evaluate(ranked)
+    assert got.first()["n_facts"] == 0
+    want = duck.execute(rank.evaluate_sql(
+        "SELECT 1::BIGINT AS s, 1 AS p, 1::BIGINT AS o, 0.5::DOUBLE AS score,"
+        " false AS is_error WHERE false"))
+    assert_df_equal(got, want)
