@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from kgspark import (constraints, correct, dedup, embeddings, encode,
                      errorsgen, evalops, extract, hierarchy, link, multimodal,
                      patybred, pipeline, scoring, simsearch, synth, textstats,
-                     typesys)
+                     typesys, util)
 
 P_ERROR = 0.05
 
@@ -141,7 +141,7 @@ def _q_paths_depth2(spark: SparkSession, sf: str) -> DataFrame:
     """Depth-2 path supports; tiny metadata assembled from the distributed
     BFS (pair tables are Spark-side; supports are their counts)."""
     g = pipeline.build_graph(spark, sf)
-    idx = patybred.enumerate_paths(g.triples, g.relations.count())
+    idx = patybred.enumerate_paths(g.triples, g.n_relations)
     rows = [(p[0], p[1], s) for p, s in sorted(idx.supports.items())
             if len(p) == 2]
     df = spark.createDataFrame(rows or [(0, 0, 0)], "p1 int, p2 int, support bigint")
@@ -157,7 +157,7 @@ def _q_paths_depth2_beam(spark: SparkSession, sf: str) -> DataFrame:
     """Depth-2 path supports under the top-N relevance beam (W5)."""
     g = pipeline.build_graph(spark, sf)
     idx = patybred.enumerate_paths(
-        g.triples, g.relations.count(),
+        g.triples, g.n_relations,
         max_paths_per_level=BEAM_N, path_selection_mode="inter")
     rows = [(p[0], p[1], s) for p, s in sorted(idx.supports.items())
             if len(p) == 2]
@@ -181,19 +181,19 @@ def _q_patybred_negatives_nbh(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_patybred_negatives_pra(spark: SparkSession, sf: str) -> DataFrame:
     g = pipeline.build_graph(spark, sf)
-    idx = patybred.enumerate_paths(g.triples, g.relations.count())
+    idx = patybred.enumerate_paths(g.triples, g.n_relations)
     return patybred.generate_negatives_pra(g.triples, idx)
 
 
 def _q_patybred_features(spark: SparkSession, sf: str) -> DataFrame:
     g = pipeline.build_graph(spark, sf)
-    idx = patybred.enumerate_paths(g.triples, g.relations.count())
+    idx = patybred.enumerate_paths(g.triples, g.n_relations)
     return patybred.features_long(g.triples, idx, g.types)
 
 
 def _q_patybred_features_iorels(spark: SparkSession, sf: str) -> DataFrame:
     g = pipeline.build_graph(spark, sf)
-    idx = patybred.enumerate_paths(g.triples, g.relations.count())
+    idx = patybred.enumerate_paths(g.triples, g.n_relations)
     return patybred.features_long(g.triples, idx, g.types, iorels=True)
 
 
@@ -440,9 +440,9 @@ def _q_type_corrections_learned(spark, sf):
     from kgspark import rank, scoring
 
     g = pipeline.build_graph(spark, sf)
-    tyx = pipeline.materialize(correct.inject_type_errors(g.types))
+    tyx = util.materialize(correct.inject_type_errors(g.types))
     facts = g.triples
-    scores = pipeline.materialize(
+    scores = util.materialize(
         scoring.sdvalidate_scores(facts, tyx)
         .withColumn("score", F.round("score", 6)))
     ranked = rank.rank_facts(scores)
@@ -661,7 +661,7 @@ def _q_paths_pruned(spark: SparkSession, sf: str) -> DataFrame:
     never become candidates."""
     g = pipeline.build_graph(spark, sf)
     dom, ran = hierarchy.domain_range_ids(g.relations)
-    idx = patybred.enumerate_paths(g.triples, g.relations.count(),
+    idx = patybred.enumerate_paths(g.triples, g.n_relations,
                                    domains=dom, ranges=ran)
     rows = [(p[0], p[1], s) for p, s in sorted(idx.supports.items())
             if len(p) == 2]
@@ -674,7 +674,7 @@ def _q_path_relevance(spark: SparkSession, sf: str) -> DataFrame:
     """J2: endpoint-overlap relevance of every depth-2 composition
     candidate under all five reference modes (patybred.py:97-138)."""
     g = pipeline.build_graph(spark, sf)
-    return patybred.relevance_table(g.triples, g.relations.count())
+    return patybred.relevance_table(g.triples, g.n_relations)
 
 
 def _q_types_merged(spark: SparkSession, sf: str) -> DataFrame:

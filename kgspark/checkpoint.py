@@ -1,24 +1,25 @@
-"""Checkpoint/resume with per-partition lineage + counters (north rule).
+"""The two stores the pipeline chain (``kgspark.pipeline``) runs on.
 
-Reference analog: the NPZ stage files (/root/reference/load_kb.py:250-259)
-— each pipeline stage persists its output so later entry points reload
-instead of recomputing. Our version:
+Both answer ``stage(name, build, params, deps)`` and key a stage by its
+``fingerprint``: a hash of its name, params and its deps' fingerprints
+(plus the library version) — of what it is made from — so a changed
+parameter re-keys its stage and every stage downstream.
 
-* every stage writes parquet under ``<workdir>/<stage>/data`` (optionally
-  hash-partitioned by columns — the Iceberg-table layout; the sandbox has
-  no Iceberg jars, so the writer abstracts over plain partitioned parquet)
-* a ``manifest.json`` records: stage name, a **fingerprint** (hash of the
-  stage's parameters + its upstream manifests' fingerprints — a lineage
-  chain), row count, per-file row counters (read from the parquet
-  footers on the driver — no Spark job), schema, wall time
-* on resume, a stage whose manifest exists with a matching fingerprint is
-  loaded from parquet (lineage-truncated, like the reference reloading an
-  NPZ); any parameter or upstream change invalidates the fingerprint and
-  forces recompute of that stage and everything after it.
+* ``Checkpointer`` (parquet, the analog of the reference's NPZ stage
+  files, ``load_kb.py:250-259``): resume across runs. A stage is written
+  under ``<workdir>/<stage>/data`` (optionally partitioned, with an
+  explicit ``salt`` column for hot-key skew) beside a ``manifest.json``
+  of its fingerprint, rows, per-file row counters (read from the parquet
+  footers — no Spark job), schema and wall time; a matching manifest
+  reloads it.
+* ``MemoryStore``: reuse within one session. Outputs are kept
+  ``util.materialize``d in a dict on the ``SparkSession`` object, so
+  ``spark.newSession()`` starts empty; sources (no deps) stay lazy scans,
+  checkpointed leaves are not checkpointed again, layout arguments are
+  ignored, and ``rows[name]`` runs one ``count()`` when first asked.
 
-Skew handling: ``with_salt`` bakes an explicit salt column into hot-key
-writes (north rule: "explicit salting of hot predicates and repo-key
-skew"); readers group by (key, salt) then re-aggregate.
+``derived`` values (a projection, the path index) are kept by key in
+memory and rebuilt on each parquet run.
 """
 
 from __future__ import annotations
@@ -63,14 +64,40 @@ def _file_rows(data_dir: str) -> list[dict]:
     return sorted(out, key=lambda x: x["file"])
 
 
-class Checkpointer:
-    """Stage-level checkpoint/resume driver."""
+class _Store:
+    """The stage key both stores use (module docstring)."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._fingerprints: dict[str, str] = {}  # stage → key, this run
+
+    def fingerprint(self, stage: str, params: dict, deps: list[str]) -> str:
+        import kgspark
+
+        payload = {
+            "stage": stage,
+            "params": params,
+            "deps": {d: self._fingerprints.get(d, "?") for d in deps},
+            # code version participates so upgrading the library invalidates
+            # checkpoints written by older stage logic
+            "code_version": kgspark.__version__,
+        }
+        return sha256(json.dumps(payload, sort_keys=True).encode()).hexdigest()
+
+    def _key(self, name: str, params: dict | None,
+             deps: list[str] | None) -> str:
+        self._fingerprints[name] = self.fingerprint(name, params or {},
+                                                    deps or [])
+        return self._fingerprints[name]
+
+
+class Checkpointer(_Store):
+    """Parquet store: stage-level checkpoint/resume across runs."""
 
     def __init__(self, spark: SparkSession, workdir: str):
-        self.spark = spark
+        super().__init__(spark)
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
-        self._fingerprints: dict[str, str] = {}
         self.rows: dict[str, int] = {}  # stage → row count (from manifests)
         self.events: list[dict] = []  # audit of hits/recomputes this run
 
@@ -89,19 +116,6 @@ class Checkpointer:
         except (OSError, json.JSONDecodeError):
             return None
 
-    def fingerprint(self, stage: str, params: dict, deps: list[str]) -> str:
-        import kgspark
-
-        payload = {
-            "stage": stage,
-            "params": params,
-            "deps": {d: self._fingerprints.get(d, "?") for d in deps},
-            # code version participates so upgrading the library invalidates
-            # checkpoints written by older stage logic
-            "code_version": kgspark.__version__,
-        }
-        return sha256(json.dumps(payload, sort_keys=True).encode()).hexdigest()
-
     # ------------------------------------------------------------------ API
 
     def stage(
@@ -111,13 +125,15 @@ class Checkpointer:
         params: dict | None = None,
         deps: list[str] | None = None,
         partition_by: list[str] | None = None,
+        salt: list[str] | None = None,
     ) -> DataFrame:
         """Return the stage output, recomputing only when the fingerprint
-        (params + upstream lineage) changed."""
+        (params + upstream lineage) changed. ``salt`` writes a ``salt``
+        column hashed from those columns, which the returned DataFrame
+        leaves out."""
         params = params or {}
         deps = deps or []
-        fp = self.fingerprint(name, params, deps)
-        self._fingerprints[name] = fp
+        fp = self._key(name, params, deps)
 
         m = self._read_manifest(name)
         data_dir = os.path.join(self._dir(name), "data")
@@ -125,8 +141,9 @@ class Checkpointer:
             self.rows[name] = m["rows"]
             self.events.append({"stage": name, "action": "resume", "rows": m["rows"]})
             # the known schema: inferring it would cost a Spark job
-            return self.spark.read.schema(
+            out = self.spark.read.schema(
                 StructType.fromJson(m["schema"])).parquet(data_dir)
+            return out.drop("salt") if salt else out
 
         t0 = time.time()
         # Crash-safe ordering: a manifest must never describe data it did
@@ -139,6 +156,8 @@ class Checkpointer:
         except FileNotFoundError:
             pass
         df = build()
+        if salt:
+            df = with_salt(df, salt)
         tmp_dir = data_dir + ".tmp"
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -173,95 +192,72 @@ class Checkpointer:
             json.dump(manifest, f, indent=1)
         self.events.append({"stage": name, "action": "compute", "rows": rows,
                             "wall_sec": manifest["wall_sec"]})
-        return out
+        return out.drop("salt") if salt else out
+
+    def derived(self, name: str, build: Callable, **key):
+        """A value computed from stages; rebuilt on every run."""
+        return build()
+
+
+class MemoryStore(_Store):
+    """In-memory store: each stage's value, kept under its key for the
+    life of the SparkSession object."""
+
+    def __init__(self, spark: SparkSession):
+        super().__init__(spark)
+        if not hasattr(spark, "_kgspark_stages"):
+            spark._kgspark_stages = {}  # key → [value, row count]
+        self._held = spark._kgspark_stages
+        self.rows = self  # rows[name]: one count() per stage, on first ask
+
+    def __getitem__(self, name: str) -> int:
+        held = self._held[self._fingerprints[name]]
+        if held[1] is None:
+            held[1] = held[0].count()
+        return held[1]
+
+    def stage(self, name: str, build: Callable[[], DataFrame],
+              params: dict | None = None, deps: list[str] | None = None,
+              **layout) -> DataFrame:
+        """The stage output, checkpointed once per key (``layout`` is the
+        parquet store's business)."""
+        from kgspark.ordering import _is_materialized
+        from kgspark.util import materialize
+
+        def kept() -> DataFrame:
+            df = build()
+            return df if not deps or _is_materialized(df) else materialize(df)
+
+        return self.derived(name, kept, params, deps)
+
+    def derived(self, name: str, build: Callable, params: dict | None = None,
+                deps: list[str] | None = None):
+        """A value computed from stages, built once per key."""
+        key = self._key(name, params, deps)
+        if key not in self._held:
+            self._held[key] = [build(), None]
+        return self._held[key][0]
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, workdir: str,
                  method: str = "sdvalidate", p_error: float = 0.05) -> dict:
-    """Checkpointed end-to-end run; every stage resumable independently.
+    """Checkpointed end-to-end run: the pipeline chain on the parquet
+    store, every stage resumable independently.
 
-    Layout mirrors §1.4 of SURVEY.md: ``triples`` partitioned by ``p``
-    (the per-predicate tensor slices) with an explicit salt column for the
-    hot-predicate skew; dims and types unpartitioned.
+    ``method`` is ``sdvalidate``, ``patybred`` or ``correct`` (SDValidate
+    scores, then the repair stages). Layout mirrors §1.4 of SURVEY.md:
+    ``triples`` partitioned by ``p`` (the per-predicate tensor slices)
+    with an explicit salt column for the hot-predicate skew; dims and
+    types unpartitioned.
     """
-    from kgspark import (encode, errorsgen, extract, link, rank, scoring,
-                         synth, typesys)
-    from kgspark import patybred as pb
+    from kgspark import pipeline
 
     ck = Checkpointer(spark, workdir)
-
-    rf = ck.stage(
-        "repo_files", lambda: synth.repo_files(spark, sf_dir),
-        params={"sf_dir": sf_dir},
-    )
-    tr_raw = ck.stage(
-        "triples_raw", lambda: extract.extract_triples(rf),
-        deps=["repo_files"],
-    )
-    tr = ck.stage(
-        "triples_canonical", lambda: link.canonicalize_triples(tr_raw),
-        deps=["triples_raw"],
-    )
-    ents = ck.stage(
-        "entities", lambda: encode.dense_ids(
-            tr.select(F.col("subj").alias("name")).unionByName(
-                tr.select(F.col("obj").alias("name")))),
-        deps=["triples_canonical"],
-    )
-    rels = ck.stage(
-        "relations", lambda: encode.dense_ids(
-            tr.select(F.col("pred").alias("name"))),
-        deps=["triples_canonical"],
-    )
-    enc = ck.stage(
-        "triples", lambda: with_salt(
-            encode.encode_triples(tr, ents, rels), ["s", "o"]),
-        deps=["triples_canonical", "entities", "relations"],
-        partition_by=["p"],
-    ).drop("salt")
-    types = ck.stage(
-        "types", lambda: typesys.build_types(ents, enc, rels)[0],
-        deps=["triples", "entities", "relations"],
-    )
-
-    n_entities = ck.rows["entities"]
-    noisy = ck.stage(
-        "noisy_facts",
-        lambda: enc.select("s", "p", "o", F.lit(False).alias("is_error"))
-        .unionByName(
-            errorsgen.inject_errors_kind1(enc, n_entities, p_error)
-            .select("s", "p", "o", F.lit(True).alias("is_error"))),
-        params={"p_error": p_error},
-        deps=["triples"],
-    )
-
-    facts = noisy.select("s", "p", "o")
-    if method == "patybred":
-        # path metadata is cheap to re-derive; the fitted models get their
-        # own persisted stage (S6 model sink — reference pickles models,
-        # patybred.py:630-655; ours are a small parquet table)
-        idx = pb.enumerate_paths(facts, ck.rows["relations"])
-        models = ck.stage(
-            "models", lambda: pb.fit_models(facts, idx, types, n_entities),
-            params={"method": method}, deps=["noisy_facts", "types"])
-        scores = ck.stage(
-            "scores",
-            lambda: pb.score_facts(facts, idx, types, models)
-            .withColumn("score", F.round("score", 6)),
-            params={"method": method}, deps=["models"])
-    else:
-        scores = ck.stage("scores", lambda: scoring.sdvalidate_scores(
-            facts, types).withColumn("score", F.round("score", 6)),
-            params={"method": method}, deps=["noisy_facts", "types"])
-
-    ranked = ck.stage(
-        "ranked", lambda: rank.rank_facts(scores).join(noisy, ["s", "p", "o"]),
-        deps=["scores", "noisy_facts"],
-    )
-    metrics = rank.evaluate(ranked).first().asDict()
-    metrics = {k: (round(v, 6) if isinstance(v, float) else v)
-               for k, v in metrics.items()}
-    out = {"metrics": metrics, "events": ck.events}
+    g = pipeline.construct(ck, sf_dir)
+    d = pipeline.detect(ck, g, p_error, method=(
+        "patybred" if method == "patybred" else "sdvalidate"))
+    out = {"metrics": pipeline.metrics(d.ranked).first().asDict(),
+           "events": ck.events}
 
     if method == "correct":
         # detect-and-REPAIR (M7/P7): name-similarity candidates →
@@ -272,11 +268,11 @@ def run_pipeline(spark: SparkSession, sf_dir: str, workdir: str,
         corr = ck.stage(
             "corrections",
             lambda: correct.correct_errors(
-                ranked, facts, types, ents,
+                d.ranked, d.facts, g.types, g.entities,
                 min_score=0.01, min_score_gain=1.0),
             params={"method": method}, deps=["ranked"])
-        repaired = ck.stage(
-            "repaired", lambda: correct.apply_corrections(facts, corr),
+        ck.stage(
+            "repaired", lambda: correct.apply_corrections(d.facts, corr),
             deps=["corrections"], partition_by=["p"])
         out["n_corrections"] = ck.rows["corrections"]
         out["n_repaired_facts"] = ck.rows["repaired"]

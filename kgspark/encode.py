@@ -36,14 +36,20 @@ def dense_ids(names: DataFrame, name_col: str = "name",
         .select(id_col, name_col)
 
 
+def entity_dim(triples_raw: DataFrame) -> DataFrame:
+    """entities(id, name): every subject and object of the string triples."""
+    return dense_ids(triples_raw.select(F.col("subj").alias("name")).unionByName(
+        triples_raw.select(F.col("obj").alias("name"))))
+
+
+def relation_dim(triples_raw: DataFrame) -> DataFrame:
+    """relations(id, name): every predicate of the string triples."""
+    return dense_ids(triples_raw.select(F.col("pred").alias("name")))
+
+
 def build_dims(triples_raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """entities(id, name) + relations(id, name) dims from string triples."""
-    ents = triples_raw.select(F.col("subj").alias("name")).unionByName(
-        triples_raw.select(F.col("obj").alias("name"))
-    )
-    entities = dense_ids(ents, "name", "id")
-    relations = dense_ids(triples_raw.select(F.col("pred").alias("name")), "name", "id")
-    return entities, relations
+    return entity_dim(triples_raw), relation_dim(triples_raw)
 
 
 def encode_triples(triples_raw: DataFrame, entities: DataFrame,

@@ -980,68 +980,19 @@ def patybred_dt_ranked(spark: SparkSession, sf_dir: str,
 # ------------------------------------------------------------ end-to-end
 
 
-@dataclass
-class PBBundle:
-    """Shared PaTyBRED intermediates for one (sf, p_error, clf, kind)."""
-    noisy: DataFrame   # (s, p, o, is_error)
-    facts: DataFrame   # (s, p, o)
-    idx: PathIndex
-    models: DataFrame  # weight table (lgr) or leaf table (dt)
-    ranked: DataFrame  # (s, p, o, score, rank, is_error), materialized
-
-
-# Memoized per (session, sf, p_error[, clf], kind): the driver's
-# correctness pass runs ranked/metrics/corrections queries over the SAME
-# noisy graph + fit — without sharing, each query repeats the path BFS and
-# the classifier fit from scratch (the r2 driver ran out of budget at
-# query 50 for exactly this reason).
-_PB_BASE_MEMO: dict[tuple, tuple] = {}
-_PB_BUNDLE_MEMO: dict[tuple, PBBundle] = {}
-
-
-def _pb_base(spark: SparkSession, sf_dir: str, p_error: float, kind: int,
-             variant: str = "base", replace: bool = False):
-    from kgspark import pipeline
-
-    key = (id(spark), sf_dir, p_error, kind, variant, replace)
-    if key not in _PB_BASE_MEMO:
-        g = pipeline.build_graph(spark, sf_dir, variant=variant)
-        noisy = materialize(pipeline.noisy_facts(g, p_error, kind, replace))
-        facts = noisy.select("s", "p", "o")
-        idx = enumerate_paths(facts, g.relations.count())
-        _PB_BASE_MEMO[key] = (g, noisy, facts, idx)
-    return _PB_BASE_MEMO[key]
-
-
 def pb_bundle(spark: SparkSession, sf_dir: str, p_error: float = 0.05,
               clf: str = "lgr", kind: int = 1, variant: str = "base",
               replace: bool = False, iorels: bool = False,
-              max_feats: int | None = None) -> PBBundle:
-    """Noisy graph → fit → score → rank, memoized end-to-end."""
-    from kgspark import pipeline, rank
+              max_feats: int | None = None):
+    """Noisy graph → fit → score → rank: the pipeline chain with the
+    PaTyBRED scorer on the session's in-memory store, so the driver's
+    ranked/metrics/corrections queries over the same noisy graph share
+    one path BFS and one fit (→ ``pipeline.Detection``)."""
+    from kgspark import pipeline
 
-    key = (id(spark), sf_dir, p_error, clf, kind, variant, replace,
-           iorels, max_feats)
-    hit = _PB_BUNDLE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    g, noisy, facts, idx = _pb_base(spark, sf_dir, p_error, kind,
-                                    variant, replace)
-    if clf == "lgr":
-        models = fit_models(facts, idx, g.types, g.n_entities,
-                            iorels, max_feats)
-        scores = score_facts(facts, idx, g.types, models, iorels)
-    else:
-        models = fit_models_dt(facts, idx, g.types, g.n_entities,
-                               iorels, max_feats)
-        scores = score_facts_dt(facts, idx, g.types, models, iorels)
-    scores = materialize(scores.withColumn("score", F.round("score", 6)))
-    ranked = materialize(
-        rank.rank_facts(scores).join(noisy, ["s", "p", "o"]).select(
-            "s", "p", "o", "score", "rank", "is_error"))
-    bundle = PBBundle(noisy, facts, idx, models, ranked)
-    _PB_BUNDLE_MEMO[key] = bundle
-    return bundle
+    return pipeline.in_memory(
+        spark, sf_dir, variant, p_error=p_error, kind=kind, replace=replace,
+        method="patybred", clf=clf, iorels=iorels, max_feats=max_feats)
 
 
 def patybred_ranked(spark: SparkSession, sf_dir: str,
@@ -1052,17 +1003,9 @@ def patybred_ranked(spark: SparkSession, sf_dir: str,
 
 def patybred_metrics(spark: SparkSession, sf_dir: str,
                      p_error: float = 0.05) -> DataFrame:
-    from kgspark import rank
+    from kgspark import pipeline
 
-    ranked = patybred_ranked(spark, sf_dir, p_error)
-    m = rank.evaluate(ranked)
-    return m.select(
-        *[F.round(c, 6).alias(c) for c in
-          ("mean_rank", "mrr", "f_mean_rank", "f_mrr")],
-        "n_errors", "n_facts",
-        F.round("roc_auc", 6).alias("roc_auc"),
-        F.round("pr_auc", 6).alias("pr_auc"),
-    )
+    return pipeline.metrics(patybred_ranked(spark, sf_dir, p_error))
 
 
 # ---------------------------------------------------------------- SQL (oracle)

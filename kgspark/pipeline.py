@@ -1,12 +1,16 @@
-"""End-to-end KG construction + error-detection pipeline composition.
+"""The KG construction + error-detection chain, written once.
 
-Mirrors the reference entry points (SURVEY §3):
-  E1 ingest   → build_graph      (load_kb.py analog)
-  E2 rank     → flagship_ranked  (rank_facts.py analog, SDValidate scorer)
-  E3 evaluate → flagship_metrics (detect_errors.py analog)
-
-Every stage also has a DuckDB oracle builder so the whole chain is
-value-checked end-to-end at sf0.01 by the driver.
+The order — ingest, link, encode, types, inject errors, score, rank — is
+one sequence of ``store.stage(name, build, params, deps)`` calls in
+``construct`` (repo_files → … → types) and ``detect`` (noisy_facts →
+[models] → scores → ranked). A parameter enters at the stage that uses
+it, so two runs share exactly the stages whose keys match. The chain runs
+on either store of ``kgspark.checkpoint``: the parquet ``Checkpointer``
+(``checkpoint.run_pipeline``) or the session's ``MemoryStore``, used by
+``build_graph`` (E1 ingest, load_kb.py), ``flagship_ranked`` (E2 rank,
+rank_facts.py), ``flagship_metrics`` (E3 evaluate, detect_errors.py)
+and ``patybred.pb_bundle``. Every stage also has a DuckDB oracle builder,
+so the driver value-checks the whole chain at sf0.01.
 """
 
 from __future__ import annotations
@@ -17,13 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgspark import encode, errorsgen, extract, rank, scoring, synth, typesys
-
-
-from kgspark.util import materialize  # re-export (bench/tests import from here)
+from kgspark.checkpoint import MemoryStore
 
 
 @dataclass
 class Graph:
+    """The construction stages of one chain run, with sizes and the
+    type-name dimension read from its store when asked for."""
+    store: object  # the MemoryStore or Checkpointer the chain ran on
     repo_files: DataFrame
     triples_raw: DataFrame  # pre-linking (subj, pred, obj) strings
     triples_str: DataFrame  # canonicalized (subj, pred, obj) strings
@@ -31,60 +36,121 @@ class Graph:
     relations: DataFrame
     triples: DataFrame  # encoded (s, p, o)
     types: DataFrame
-    type_names: DataFrame
-    n_entities: int
+
+    @property
+    def n_entities(self) -> int:
+        return self.store.rows["entities"]
+
+    @property
+    def n_relations(self) -> int:
+        return self.store.rows["relations"]
+
+    @property
+    def type_names(self) -> DataFrame:
+        return self.store.derived(
+            "type_names", lambda: typesys.build_types(
+                self.entities, self.triples, self.relations)[1],
+            deps=["types"])
 
 
-_GRAPH_MEMO: dict[tuple[int, str], Graph] = {}
+@dataclass
+class Detection:
+    """The error-detection stages of one chain run."""
+    noisy: DataFrame   # (s, p, o, is_error)
+    facts: DataFrame   # (s, p, o)
+    idx: object        # patybred.PathIndex (None for SDValidate)
+    models: DataFrame | None  # weight table (lgr) or leaf table (dt)
+    ranked: DataFrame  # (s, p, o, score, rank, is_error)
 
 
-def build_graph(spark: SparkSession, sf_dir: str, cache: bool = True,
-                variant: str = "base") -> Graph:
-    """Construct (and per-session memoize) the full KG from a testdata dir.
-
-    ``variant='rich'`` builds from the 6-relation rich corpus
-    (synth.repo_files_rich) used by the reference-gate correction queries.
-    """
-    key = (id(spark), sf_dir, variant)
-    if cache and key in _GRAPH_MEMO:
-        return _GRAPH_MEMO[key]
-    g = _build_graph(spark, sf_dir, cache, variant)
-    if cache:
-        _GRAPH_MEMO[key] = g
-    return g
-
-
-def _build_graph(spark: SparkSession, sf_dir: str, cache: bool = True,
-                 variant: str = "base") -> Graph:
+def construct(store, sf_dir: str, variant: str = "base") -> Graph:
+    """repo_files → … → types on ``store``; ``variant='rich'`` reads the
+    6-relation corpus of the reference-gate correction queries."""
     from kgspark import link
 
-    rf = (synth.repo_files_rich(spark, sf_dir) if variant == "rich"
-          else synth.repo_files(spark, sf_dir))
-    # base corpus carries no file→file mention lines: arms off (zero cost)
-    tr_raw = extract.extract_triples(rf, file_mentions=(variant == "rich"))
-    if cache:
-        tr_raw = materialize(tr_raw)
+    source = synth.repo_files_rich if variant == "rich" else synth.repo_files
+    rf = store.stage("repo_files", lambda: source(store.spark, sf_dir),
+                     params={"sf_dir": sf_dir, "variant": variant})
+    # the base corpus carries no file→file mention lines: arms off (zero cost)
+    tr_raw = store.stage(
+        "triples_raw",
+        lambda: extract.extract_triples(rf, file_mentions=(variant == "rich")),
+        deps=["repo_files"])
     # entity linking + canonicalization (MinHash-LSH blocking + iterative CC)
-    tr = link.canonicalize_triples(tr_raw)
-    if cache:
-        tr = materialize(tr)
-    ents, rels = encode.build_dims(tr)
-    if cache:
-        ents, rels = materialize(ents), materialize(rels)
-    enc = encode.encode_triples(tr, ents, rels)
-    if cache:
-        enc = materialize(enc)
-    types, tnames = typesys.build_types(ents, enc, rels)
-    if cache:
-        types = materialize(types)
-    return Graph(rf, tr_raw, tr, ents, rels, enc, types, tnames, ents.count())
+    tr = store.stage("triples_canonical",
+                     lambda: link.canonicalize_triples(tr_raw),
+                     deps=["triples_raw"])
+    ents = store.stage("entities", lambda: encode.entity_dim(tr),
+                       deps=["triples_canonical"])
+    rels = store.stage("relations", lambda: encode.relation_dim(tr),
+                       deps=["triples_canonical"])
+    enc = store.stage("triples", lambda: encode.encode_triples(tr, ents, rels),
+                      deps=["triples_canonical", "entities", "relations"],
+                      partition_by=["p"], salt=["s", "o"])
+    types = store.stage("types",
+                        lambda: typesys.build_types(ents, enc, rels)[0],
+                        deps=["triples", "entities", "relations"])
+    return Graph(store, rf, tr_raw, tr, ents, rels, enc, types)
 
 
-# Flagship (SDValidate-scored) intermediates, memoized per
-# (session, sf, p_error): six driver queries (ranked, ranked_avg, metrics,
-# corrections, type_corrections, corrected_triples) consume the same
-# noisy→score→rank chain.
-_FLAGSHIP_MEMO: dict[tuple, DataFrame] = {}
+def detect(store, g: Graph, p_error: float = 0.05, kind: int = 1,
+           replace: bool = False, method: str = "sdvalidate",
+           clf: str = "lgr", iorels: bool = False,
+           max_feats: int | None = None, ties: str = "ordinal") -> Detection:
+    """noisy_facts → [models] → scores → ranked on ``store``. ``method``
+    is ``sdvalidate`` or ``patybred`` (``clf`` ``lgr`` or ``dt``); ``ties``
+    is ``ordinal`` (ties broken by (s, p, o)) or ``average`` (scipy's
+    default, the reference rank_facts.py:136 variant)."""
+    from kgspark import patybred as pb
+
+    noisy = store.stage(
+        "noisy_facts", lambda: noisy_facts(g, p_error, kind, replace),
+        params={"p_error": p_error, "kind": kind, "replace": replace},
+        deps=["triples"])
+    facts = store.derived("facts", lambda: noisy.select("s", "p", "o"),
+                          deps=["noisy_facts"])
+    idx = models = None
+    if method == "patybred":
+        # the fitted models get their own stage (S6 model sink — the
+        # reference pickles its models, patybred.py:630-655)
+        idx = store.derived(
+            "paths", lambda: pb.enumerate_paths(facts, g.n_relations),
+            deps=["noisy_facts"])
+        fit, score = ((pb.fit_models, pb.score_facts) if clf == "lgr"
+                      else (pb.fit_models_dt, pb.score_facts_dt))
+        models = store.stage(
+            "models", lambda: fit(facts, idx, g.types, g.n_entities,
+                                  iorels, max_feats),
+            params={"clf": clf, "iorels": iorels, "max_feats": max_feats},
+            deps=["noisy_facts", "types"])
+        scored, deps = (lambda: score(facts, idx, g.types, models, iorels),
+                        ["models"])
+    else:
+        scored, deps = (lambda: scoring.sdvalidate_scores(facts, g.types),
+                        ["noisy_facts", "types"])
+    scores = store.stage(
+        "scores", lambda: scored().withColumn("score", F.round("score", 6)),
+        params={"method": method}, deps=deps)
+    order = rank.rank_facts if ties == "ordinal" else rank.rank_facts_average
+    ranked = store.stage(
+        "ranked", lambda: order(scores).join(noisy, ["s", "p", "o"])
+        .select("s", "p", "o", "score", "rank", "is_error"),
+        params={"ties": ties}, deps=["scores", "noisy_facts"])
+    return Detection(noisy, facts, idx, models, ranked)
+
+
+def in_memory(spark: SparkSession, sf_dir: str, variant: str = "base",
+              **params) -> Detection:
+    """The whole chain on the session's in-memory store; ``params`` go to
+    ``detect``."""
+    store = MemoryStore(spark)
+    return detect(store, construct(store, sf_dir, variant), **params)
+
+
+def build_graph(spark: SparkSession, sf_dir: str,
+                variant: str = "base") -> Graph:
+    """The constructed KG, checkpointed once per session and key."""
+    return construct(MemoryStore(spark), sf_dir, variant)
 
 
 def noisy_facts(g: Graph, p_error: float = 0.05, kind: int = 1,
@@ -94,7 +160,7 @@ def noisy_facts(g: Graph, p_error: float = 0.05, kind: int = 1,
     ``replace=True`` removes each corrupted fact's ORIGINAL from the
     graph (the realistic typo-confusion regime the reference's repair
     targets: the wrong triple is present, the right one is absent —
-    /root/reference/correct_errors.py:99-141). Default keeps originals
+    correct_errors.py:99-141). Default keeps originals
     (additive injection, the generate_errors.py evaluation shape).
     """
     if kind == 1:
@@ -118,41 +184,24 @@ def noisy_facts(g: Graph, p_error: float = 0.05, kind: int = 1,
 def flagship_ranked(spark: SparkSession, sf_dir: str,
                     p_error: float = 0.05) -> DataFrame:
     """Noisy graph → SDValidate score → global ordinal rank (most suspect first)."""
-    key = (id(spark), sf_dir, p_error)
-    hit = _FLAGSHIP_MEMO.get(key)
-    if hit is not None:
-        return hit
-    g = build_graph(spark, sf_dir)
-    noisy = materialize(noisy_facts(g, p_error))
-    scores = scoring.sdvalidate_scores(noisy.select("s", "p", "o"), g.types)
-    scores = materialize(scores.withColumn("score", F.round("score", 6)))
-    ranked = rank.rank_facts(scores)
-    res = materialize(ranked.join(noisy, ["s", "p", "o"]).select(
-        "s", "p", "o", "score", "rank", "is_error"
-    ))
-    _FLAGSHIP_MEMO[key] = res
-    return res
+    return in_memory(spark, sf_dir, p_error=p_error).ranked
 
 
 def flagship_ranked_avg(spark: SparkSession, sf_dir: str,
                         p_error: float = 0.05) -> DataFrame:
     """flagship_ranked with scipy's default *average* tie ranks (the
     reference rank_facts.py:136 variant; W1 per-call-site choice)."""
-    g = build_graph(spark, sf_dir)
-    noisy = materialize(noisy_facts(g, p_error))
-    scores = scoring.sdvalidate_scores(noisy.select("s", "p", "o"), g.types)
-    scores = materialize(scores.withColumn("score", F.round("score", 6)))
-    ranked = rank.rank_facts_average(scores)
-    return ranked.join(noisy, ["s", "p", "o"]).select(
-        "s", "p", "o", "score", "rank", "is_error"
-    )
+    return in_memory(spark, sf_dir, p_error=p_error, ties="average").ranked
 
 
 def flagship_metrics(spark: SparkSession, sf_dir: str,
                      p_error: float = 0.05) -> DataFrame:
-    ranked = flagship_ranked(spark, sf_dir, p_error)
-    m = rank.evaluate(ranked)
-    return m.select(
+    return metrics(flagship_ranked(spark, sf_dir, p_error))
+
+
+def metrics(ranked: DataFrame) -> DataFrame:
+    """``rank.evaluate`` with the rates rounded to 6 dp (as the oracle)."""
+    return rank.evaluate(ranked).select(
         *[F.round(c, 6).alias(c) for c in
           ("mean_rank", "mrr", "f_mean_rank", "f_mrr")],
         "n_errors", "n_facts",

@@ -55,6 +55,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # only effective when this call creates the JVM (tests, bench)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers import kgspark from where the driver did (any cwd)
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

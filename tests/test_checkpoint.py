@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from kgspark import patybred, pipeline
 from kgspark.checkpoint import Checkpointer, run_pipeline, with_salt
 from tests.conftest import SF_TINY
 
@@ -156,3 +157,58 @@ def test_run_pipeline_resume_equivalence(spark, tmp_path):
     assert r1["metrics"] == r2["metrics"]
     assert all(e["action"] == "compute" for e in r1["events"])
     assert all(e["action"] == "resume" for e in r2["events"])
+
+
+def _same_metrics(got: dict, want: dict) -> bool:
+    return set(got) == set(want) and all(
+        abs(got[k] - want[k]) <= 1e-6 if isinstance(want[k], float)
+        else got[k] == want[k] for k in want)
+
+
+def test_parquet_and_memory_stores_agree(spark, tmp_path):
+    """The chain gives the same metrics on the parquet store
+    (run_pipeline) as on the in-memory store (flagship / PaTyBRED)."""
+    for method, metrics in (("sdvalidate", pipeline.flagship_metrics),
+                            ("patybred", patybred.patybred_metrics)):
+        got = run_pipeline(spark, SF_TINY, str(tmp_path / method), method,
+                           0.05)["metrics"]
+        want = metrics(spark, SF_TINY, 0.05).first().asDict()
+        assert _same_metrics(got, want), (method, got, want)
+
+
+def test_memory_store_is_scoped_to_the_session(spark, monkeypatch):
+    """build_graph then pb_bundle on one session checkpoints each graph
+    stage once (the bundle finds them under the same keys); a new
+    session starts empty and runs the jobs again."""
+    engine = type(spark.range(1))
+    calls = []
+    orig = engine.localCheckpoint
+
+    def spy(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(engine, "localCheckpoint", spy)
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+
+    def checkpoints(fn) -> int:
+        calls.clear()
+        fn()
+        return len(calls)
+
+    def bundle(session):
+        return patybred.pb_bundle(session, SF_TINY, 0.05, clf="lgr", kind=3,
+                                  variant="rich", replace=True)
+
+    s1 = spark.newSession()
+    graph = checkpoints(
+        lambda: pipeline.build_graph(s1, SF_TINY, variant="rich"))
+    rest = checkpoints(lambda: bundle(s1))
+    assert graph >= 6 and rest > 0
+    j0 = jobs()
+    assert checkpoints(lambda: bundle(s1)) == 0 and jobs() == j0
+
+    s2 = spark.newSession()
+    j0 = jobs()
+    assert checkpoints(lambda: bundle(s2)) == graph + rest
+    assert jobs() > j0

@@ -48,6 +48,17 @@ def test_triples_parity(spark, duck):
     assert_df_equal(tr, duck.execute(oracle))
 
 
+def test_base_triples_same_with_file_mention_arms_auto_or_off(spark):
+    """The pipeline extracts the base corpus with ``file_mentions=False``;
+    its content template carries no include/testedby lines, so the auto
+    (``None``) arms find nothing either."""
+    rf = synth.repo_files(spark, SF_TINY)
+    auto = extract.extract_triples(rf, file_mentions=None)
+    off = extract.extract_triples(rf, file_mentions=False)
+    assert auto.count() > 0
+    assert auto.exceptAll(off).count() == 0 and off.exceptAll(auto).count() == 0
+
+
 def test_pandas_udf_matches_builtin(spark):
     """The Arrow pandas-UDF extraction path ≡ JVM regexp_extract_all path."""
     rf = synth.repo_files(spark, SF_TINY)

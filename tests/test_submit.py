@@ -12,9 +12,12 @@ import json
 import os
 import shutil
 import subprocess
+import sys
 import zipfile
 
 import pytest
+
+from tests.conftest import SF_TINY
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -78,3 +81,29 @@ def test_spark_submit_py_files_pipeline(tmp_path):
     assert res2["events"], "resume audit missing"
     assert all(ev["action"] == "resume" for ev in res2["events"]), \
         res2["events"]
+
+
+def test_python_workers_import_kgspark_from_any_cwd(tmp_path):
+    """A PaTyBRED fit (``applyInPandas``) started from a directory outside
+    the repo with no PYTHONPATH: the Python workers find kgspark through
+    the session's executor environment."""
+    script = tmp_path / "fit.py"
+    script.write_text(f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from kgspark import patybred, pipeline
+from kgspark.session import get_spark
+
+spark = get_spark("cwd-probe", master="local[2]", shuffle_partitions=4)
+g = pipeline.build_graph(spark, {SF_TINY!r})
+idx = patybred.enumerate_paths(g.triples, g.n_relations)
+print("models", patybred.fit_models(g.triples, idx, g.types,
+                                    g.n_entities).count())
+spark.stop()
+""")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, str(script)], capture_output=True,
+                         text=True, timeout=600, cwd=str(tmp_path), env=env)
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert "models " in out.stdout
