@@ -141,7 +141,7 @@ def _q_paths_depth2(spark: SparkSession, sf: str) -> DataFrame:
     """Depth-2 path supports; tiny metadata assembled from the distributed
     BFS (pair tables are Spark-side; supports are their counts)."""
     g = pipeline.build_graph(spark, sf)
-    idx = patybred.enumerate_paths(g.triples, g.n_relations)
+    idx = g.paths
     rows = [(p[0], p[1], s) for p, s in sorted(idx.supports.items())
             if len(p) == 2]
     df = spark.createDataFrame(rows or [(0, 0, 0)], "p1 int, p2 int, support bigint")
@@ -181,19 +181,19 @@ def _q_patybred_negatives_nbh(spark: SparkSession, sf: str) -> DataFrame:
 
 def _q_patybred_negatives_pra(spark: SparkSession, sf: str) -> DataFrame:
     g = pipeline.build_graph(spark, sf)
-    idx = patybred.enumerate_paths(g.triples, g.n_relations)
+    idx = g.paths
     return patybred.generate_negatives_pra(g.triples, idx)
 
 
 def _q_patybred_features(spark: SparkSession, sf: str) -> DataFrame:
     g = pipeline.build_graph(spark, sf)
-    idx = patybred.enumerate_paths(g.triples, g.n_relations)
+    idx = g.paths
     return patybred.features_long(g.triples, idx, g.types)
 
 
 def _q_patybred_features_iorels(spark: SparkSession, sf: str) -> DataFrame:
     g = pipeline.build_graph(spark, sf)
-    idx = patybred.enumerate_paths(g.triples, g.n_relations)
+    idx = g.paths
     return patybred.features_long(g.triples, idx, g.types, iorels=True)
 
 

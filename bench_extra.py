@@ -100,13 +100,13 @@ def main() -> None:
             .collect()
 
     def op_patybred():
-        idx = pb._enumerate_paths(enc, 4)
+        idx = pb.enumerate_paths(enc, 4)
         n_ents = enc.selectExpr("max(greatest(s, o)) m").first()["m"]
         models = pb.fit_models(enc, idx, types, int(n_ents))
         pb.score_facts(enc, idx, types, models).count()
 
     def op_patybred_dt():
-        idx = pb._enumerate_paths(enc, 4)
+        idx = pb.enumerate_paths(enc, 4)
         n_ents = enc.selectExpr("max(greatest(s, o)) m").first()["m"]
         models = pb.fit_models_dt(enc, idx, types, int(n_ents))
         pb.score_facts_dt(enc, idx, types, models).count()

@@ -18,8 +18,9 @@ parameter re-keys its stage and every stage downstream.
   checkpointed leaves are not checkpointed again, layout arguments are
   ignored, and ``rows[name]`` runs one ``count()`` when first asked.
 
-``derived`` values (a projection, the path index) are kept by key in
-memory and rebuilt on each parquet run.
+``derived`` values (a projection, ``pipeline.Graph.paths`` and the
+noisy graph's path index) are kept by key in memory and rebuilt on each
+parquet run.
 """
 
 from __future__ import annotations

@@ -12,18 +12,19 @@ candidate iff ``new/old ≥ min_score_gain`` and ``new > min_score``
 (ties → smaller distance, then smaller candidate id;
 correct_errors.py:126-141).
 
-Spark re-expression — everything is joins, no driver-side loop over
-suspects:
+Spark re-expression — one funnel (``_repair``) of joins, no driver-side
+loop over suspects, with the re-scorer passed in:
 
 * name candidates: SymSpell delete-variant blocking over normalized
   entity names + exact OSA Damerau-Levenshtein verify in the JVM
   (``osa_within2``) — one variant self-join, symmetric output;
 * range filter: the induced per-relation range (scoring.domran_model,
   side='o') semi-joined against the candidate's types;
-* re-score: SDValidate is f(p, types(o)), so corrected-triple scores are
-  one join against the noisy graph's (p, t) distribution — the "model"
-  stays the one fitted on the observed graph, exactly like the reference
-  re-calling ed.predict_proba;
+* re-score with the scorer fitted on the observed graph, exactly like
+  the reference re-calling ed.predict_proba. ``correct_errors`` passes
+  SDValidate's closed-form (p, types(o_new)) cosine against the noisy
+  graph's (p, t) distribution; ``correct_errors_patybred`` passes
+  ``patybred.score_facts`` over the (s, p, o_new) triples;
 * accept: per-fact window over the (small) candidate set — max rounded
   new score, then min distance, then min candidate id.
 
@@ -52,32 +53,6 @@ _DELETES_EXPR = (
 
 
 MIN_BUCKET_CAP = 64
-
-# Materialized induced-range / object-type-distribution tables shared by
-# the correction operators: correct_errors, type_corrections and the
-# PaTyBRED variant are called back-to-back over the SAME (facts, types)
-# pair (pipeline + bench flows) and each re-derived these aggregates —
-# type_corrections alone instantiated the distribution subtree three
-# times (norms + parts + flip broadcast). Keyed by DataFrame identity
-# with the references held so id() stays stable (the patybred._PATHS_MEMO
-# pattern); everything is re-derived from the inputs on every run.
-_RAN_DIST_MEMO: dict[tuple, tuple] = {}
-
-
-def _shared_ran_dist(facts: DataFrame, types: DataFrame, conf: float):
-    """→ (ran, dist): materialized domran_model(side='o') and
-    ot_dist(side='o') for the given fact/type tables."""
-    from kgspark.scoring import domran_model, ot_dist
-    from kgspark.util import materialize
-
-    key = (id(facts), id(types), conf)
-    hit = _RAN_DIST_MEMO.get(key)
-    if hit is not None and hit[0] is facts and hit[1] is types:
-        return hit[2], hit[3]
-    ran = materialize(domran_model(facts, types, conf, "o"))
-    dist = materialize(ot_dist(facts, types, "o"))
-    _RAN_DIST_MEMO[key] = (facts, types, ran, dist)
-    return ran, dist
 
 
 def osa_within2(a: str, b: str) -> Column:
@@ -182,6 +157,103 @@ def name_candidates(entities: DataFrame, max_dist: int = MAX_DIST,
     return pairs
 
 
+def _suspects(ranked: DataFrame, p: float) -> DataFrame:
+    """The top ``p`` fraction of ``ranked`` (rank 1 = most suspect) →
+    (s, p, o, score)."""
+    n = int(ranked.count() * p)
+    return ranked.where(F.col("rank") <= n).select("s", "p", "o", "score")
+
+
+def _type_dist(facts: DataFrame, types: DataFrame):
+    """→ (dist, norms): SDValidate's checkpointed (p, t, dist) object-type
+    distribution and its per-relation norms (p, _nrm)."""
+    from kgspark.scoring import ot_dist
+    from kgspark.util import materialize
+
+    dist = materialize(ot_dist(facts, types, "o"))
+    norms = dist.groupBy("p").agg(
+        F.sqrt(F.sum(F.col("dist") * F.col("dist"))).alias("_nrm"))
+    return dist, norms
+
+
+def _type_dots(pe: DataFrame, types: DataFrame, dist: DataFrame) -> DataFrame:
+    """(p, e) keys → (p, e, _dot, _nt): the sum of dist[p, t] and the
+    count over e's types, (0, 0) for an untyped e."""
+    return (
+        pe.join(types, "e", "left")
+        .join(F.broadcast(dist), ["p", "t"], "left")
+        .groupBy("p", "e")
+        .agg(F.sum(F.coalesce("dist", F.lit(0.0))).alias("_dot"),
+             F.count("t").alias("_nt"))
+    )
+
+
+def _accepted(cand: DataFrame, min_score: float,
+              min_score_gain: float) -> DataFrame:
+    """The acceptance gate on ``new_score`` against ``score`` (old score
+    0 → any positive new score passes, the reference's new/0 = inf
+    behavior)."""
+    gain_ok = F.when(F.col("score") == 0, F.col("new_score") > 0) \
+        .otherwise(F.col("new_score") / F.col("score") >= min_score_gain)
+    return cand.where(gain_ok & (F.col("new_score") > min_score)
+                      & (F.col("new_score") >= F.col("score")))
+
+
+def _repair(ranked: DataFrame, facts: DataFrame, types: DataFrame,
+            entities: DataFrame, rescore, p: float, min_score: float,
+            min_score_gain: float, max_dist: int, conf: float,
+            require_multitype: bool, exclude: DataFrame | None,
+            n_entities: int | None) -> DataFrame:
+    """The entity-repair funnel → (s, p, o, score, o_new, new_score, dist).
+
+    ``rescore`` maps the gated candidates (s, p, o, score, o_new, dist)
+    to the same rows with a ``new_score`` column."""
+    from kgspark.scoring import domran_model
+    from kgspark.util import materialize
+
+    suspects = _suspects(ranked, p)
+    if require_multitype:
+        multi = types.groupBy("e").agg(F.count("*").alias("_nt0")) \
+            .where(F.col("_nt0") >= 2).select(F.col("e").alias("o"))
+        suspects = suspects.join(multi, "o", "left_semi")
+    if exclude is not None:
+        suspects = suspects.join(exclude.select("s", "p", "o"),
+                                 ["s", "p", "o"], "left_anti")
+
+    cands = name_candidates(
+        entities, max_dist,
+        subjects=suspects.select(F.col("o").alias("id")).distinct(),
+        n_entities=n_entities)
+    cand = suspects.join(
+        cands.select(F.col("a").alias("o"), F.col("b").alias("o_new"), "dist"),
+        "o")
+
+    # candidate must carry the relation's induced range type
+    ran = domran_model(facts, types, conf, "o").select(
+        "p", F.col("t").alias("_rt"))
+    cand = cand.join(F.broadcast(ran), "p").join(
+        types.select(F.col("e").alias("o_new"), F.col("t").alias("_rt")),
+        ["o_new", "_rt"], "left_semi")
+
+    # corrected triple must not already exist
+    cand = cand.join(
+        facts.select("s", "p", F.col("o").alias("o_new")),
+        ["s", "p", "o_new"], "left_anti")
+    # checkpoint the gated candidate set: it feeds the re-score key
+    # distinct AND the join back — without truncation the whole funnel
+    # (blocking self-join + edit-distance verify + gates) executes once
+    # per consumer subtree
+    cand = _accepted(rescore(materialize(cand)), min_score, min_score_gain)
+
+    w = Window.partitionBy("s", "p", "o").orderBy(
+        F.desc("new_score"), "dist", "o_new")
+    return (
+        cand.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .select("s", "p", "o", "score", "o_new", "new_score", "dist")
+    )
+
+
 def correct_errors(
     ranked: DataFrame,
     facts: DataFrame,
@@ -209,73 +281,22 @@ def correct_errors(
       the reference skips entity replacement for those (the ``continue``
       after a type flip is accepted, correct_errors.py:55-75). Pass
       ``type_corrections(...)`` output to enforce the exclusivity.
+
+    The re-score is SDValidate's cosine of types(o_new) against the
+    noisy graph's (p, t) distribution: dot / (sqrt(nt) · ‖dist_p‖).
     """
-    n = int(ranked.count() * p)
-    suspects = ranked.where(F.col("rank") <= n).select("s", "p", "o", "score")
-    if require_multitype:
-        multi = types.groupBy("e").agg(F.count("*").alias("_nt0")) \
-            .where(F.col("_nt0") >= 2).select(F.col("e").alias("o"))
-        suspects = suspects.join(multi, "o", "left_semi")
-    if exclude is not None:
-        suspects = suspects.join(exclude.select("s", "p", "o"),
-                                 ["s", "p", "o"], "left_anti")
+    def rescore(cand: DataFrame) -> DataFrame:
+        dist, norms = _type_dist(facts, types)
+        dots = _type_dots(
+            cand.select("p", F.col("o_new").alias("e")).distinct(),
+            types, dist).withColumnRenamed("e", "o_new")
+        return cand.join(dots, ["p", "o_new"]).join(F.broadcast(norms), "p") \
+            .withColumn("new_score", F.round(
+                F.col("_dot") / (F.sqrt("_nt") * F.col("_nrm")), 6))
 
-    cands = name_candidates(
-        entities, max_dist,
-        subjects=suspects.select(F.col("o").alias("id")).distinct(),
-        n_entities=n_entities)
-    cand = suspects.join(
-        cands.select(F.col("a").alias("o"), F.col("b").alias("o_new"), "dist"),
-        "o")
-
-    # candidate must carry the relation's induced range type
-    ran0, dist = _shared_ran_dist(facts, types, conf)
-    ran = ran0.select("p", F.col("t").alias("_rt"))
-    cand = cand.join(F.broadcast(ran), "p").join(
-        types.select(F.col("e").alias("o_new"), F.col("t").alias("_rt")),
-        ["o_new", "_rt"], "left_semi")
-
-    # corrected triple must not already exist
-    cand = cand.join(
-        facts.select("s", "p", F.col("o").alias("o_new")),
-        ["s", "p", "o_new"], "left_anti")
-    # checkpoint the gated candidate set: it feeds the re-score key
-    # distinct AND the final join — without truncation the whole funnel
-    # (blocking self-join + edit-distance UDF + gates) executes once per
-    # consumer subtree
-    from kgspark.util import materialize as _mz
-    cand = _mz(cand)
-    norms = dist.groupBy("p").agg(
-        F.sqrt(F.sum(F.col("dist") * F.col("dist"))).alias("_nrm"))
-    nt = types.groupBy("e").agg(F.count("*").alias("_nt")) \
-        .withColumnRenamed("e", "o_new")
-    dots = (
-        cand.select("p", "o_new").distinct()
-        .join(types.withColumnRenamed("e", "o_new"), "o_new")
-        .join(F.broadcast(dist), ["p", "t"], "left")
-        .groupBy("p", "o_new")
-        .agg(F.sum(F.coalesce("dist", F.lit(0.0))).alias("_dot"))
-    )
-    resc = dots.join(nt, "o_new").join(F.broadcast(norms), "p").select(
-        "p", "o_new",
-        F.round(F.col("_dot") / (F.sqrt("_nt") * F.col("_nrm")), 6)
-        .alias("new_score"))
-    cand = cand.join(resc, ["p", "o_new"])
-
-    # acceptance gate (old score 0 → any positive new score passes, the
-    # reference's new/0 = inf behavior)
-    gain_ok = F.when(F.col("score") == 0, F.col("new_score") > 0) \
-        .otherwise(F.col("new_score") / F.col("score") >= min_score_gain)
-    cand = cand.where(gain_ok & (F.col("new_score") > min_score)
-                      & (F.col("new_score") >= F.col("score")))
-
-    w = Window.partitionBy("s", "p", "o").orderBy(
-        F.desc("new_score"), "dist", "o_new")
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("s", "p", "o", "score", "o_new", "new_score", "dist")
-    )
+    return _repair(ranked, facts, types, entities, rescore, p, min_score,
+                   min_score_gain, max_dist, conf, require_multitype,
+                   exclude, n_entities)
 
 
 def correct_errors_patybred(
@@ -312,45 +333,16 @@ def correct_errors_patybred(
     deviation); the rich-corpus reference-gate query runs it on."""
     from kgspark import patybred
 
-    n = int(ranked.count() * p)
-    suspects = ranked.where(F.col("rank") <= n).select("s", "p", "o", "score")
-    if require_multitype:
-        multi = types.groupBy("e").agg(F.count("*").alias("_nt")) \
-            .where(F.col("_nt") >= 2).select(F.col("e").alias("o"))
-        suspects = suspects.join(multi, "o", "left_semi")
-    cands = name_candidates(
-        entities, max_dist,
-        subjects=suspects.select(F.col("o").alias("id")).distinct(),
-        n_entities=n_entities)
-    cand = suspects.join(
-        cands.select(F.col("a").alias("o"), F.col("b").alias("o_new"), "dist"),
-        "o")
-    ran = _shared_ran_dist(facts, types, conf)[0].select(
-        "p", F.col("t").alias("_rt"))
-    cand = cand.join(F.broadcast(ran), "p").join(
-        types.select(F.col("e").alias("o_new"), F.col("t").alias("_rt")),
-        ["o_new", "_rt"], "left_semi")
-    cand = cand.join(
-        facts.select("s", "p", F.col("o").alias("o_new")),
-        ["s", "p", "o_new"], "left_anti")
+    def rescore(cand: DataFrame) -> DataFrame:
+        ct = cand.select("s", "p", F.col("o_new").alias("o")).distinct()
+        resc = patybred.score_facts(ct, idx, types, models).select(
+            "s", "p", F.col("o").alias("o_new"),
+            F.round("score", 6).alias("new_score"))
+        return cand.join(resc, ["s", "p", "o_new"])
 
-    ct = cand.select("s", "p", F.col("o_new").alias("o")).distinct()
-    resc = patybred.score_facts(ct, idx, types, models).select(
-        "s", "p", F.col("o").alias("o_new"),
-        F.round("score", 6).alias("new_score"))
-    cand = cand.join(resc, ["s", "p", "o_new"])
-
-    gain_ok = F.when(F.col("score") == 0, F.col("new_score") > 0) \
-        .otherwise(F.col("new_score") / F.col("score") >= min_score_gain)
-    cand = cand.where(gain_ok & (F.col("new_score") > min_score)
-                      & (F.col("new_score") >= F.col("score")))
-    w = Window.partitionBy("s", "p", "o").orderBy(
-        F.desc("new_score"), "dist", "o_new")
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("s", "p", "o", "score", "o_new", "new_score", "dist")
-    )
+    return _repair(ranked, facts, types, entities, rescore, p, min_score,
+                   min_score_gain, max_dist, conf, require_multitype, None,
+                   n_entities)
 
 
 # ------------------------------------------- per-type predictor (M6)
@@ -471,12 +463,12 @@ def type_corrections(
     mechanism (flip to the predictor's output, not unconditionally).
     None = unconditional flip (the pre-predictor simplification).
     """
-    n = int(ranked.count() * p)
-    suspects = ranked.where(F.col("rank") <= n).select("s", "p", "o", "score")
+    from kgspark.scoring import domran_model
+    from kgspark.util import materialize
 
-    ran0, dist = _shared_ran_dist(facts, types, conf)
-    ran = ran0.select("p", F.col("t").alias("t_new"))
-    cand = suspects.join(F.broadcast(ran), "p")
+    ran = domran_model(facts, types, conf, "o").select(
+        "p", F.col("t").alias("t_new"))
+    cand = _suspects(ranked, p).join(F.broadcast(ran), "p")
     # flip only applies when the object LACKS the predicted type
     cand = cand.join(
         types.select(F.col("e").alias("o"), F.col("t").alias("t_new")),
@@ -491,24 +483,16 @@ def type_corrections(
             ["o", "t_new"], "left_semi")
 
     # checkpoint the gated candidate set: it feeds the re-score key
-    # distinct AND the final join (same duplication as correct_errors)
-    from kgspark.util import materialize as _mz
-    cand = _mz(cand)
+    # distinct AND the final join (same duplication as _repair)
+    cand = materialize(cand)
 
-    norms = dist.groupBy("p").agg(
-        F.sqrt(F.sum(F.col("dist") * F.col("dist"))).alias("_nrm"))
-    # LEFT join: a candidate object that lost ALL its type rows
-    # (inject_type_errors regime) still re-scores — the flip is then
+    dist, norms = _type_dist(facts, types)
+    # LEFT join in _type_dots: a candidate object that lost ALL its type
+    # rows (inject_type_errors regime) still re-scores — the flip is then
     # tested from the empty vector (dot=0, nt=0), mirroring the 0.0
     # score sdvalidate_scores gave the fact.
-    parts = (
-        cand.select("p", "o").distinct()
-        .join(types.withColumnRenamed("e", "o"), "o", "left")
-        .join(F.broadcast(dist), ["p", "t"], "left")
-        .groupBy("p", "o")
-        .agg(F.sum(F.coalesce("dist", F.lit(0.0))).alias("_dot"),
-             F.count("t").alias("_nt"))
-    )
+    parts = _type_dots(cand.select("p", F.col("o").alias("e")).distinct(),
+                       types, dist).withColumnRenamed("e", "o")
     cand = cand.join(parts, ["p", "o"]) \
         .join(F.broadcast(dist.withColumnRenamed("t", "t_new")
                           .withColumnRenamed("dist", "_fd")),
@@ -517,11 +501,8 @@ def type_corrections(
     new_score = F.round(
         (F.col("_dot") + F.coalesce("_fd", F.lit(0.0)))
         / (F.sqrt(F.col("_nt") + 1) * F.col("_nrm")), 6)
-    cand = cand.withColumn("new_score", new_score)
-    gain_ok = F.when(F.col("score") == 0, F.col("new_score") > 0) \
-        .otherwise(F.col("new_score") / F.col("score") >= min_score_gain)
-    return cand.where(gain_ok & (F.col("new_score") > min_score)
-                      & (F.col("new_score") >= F.col("score"))) \
+    return _accepted(cand.withColumn("new_score", new_score), min_score,
+                     min_score_gain) \
         .select("s", "p", "o", "score", "t_new", "new_score")
 
 

@@ -266,39 +266,7 @@ def relevance_table(triples: DataFrame, R: int,
         "relevance", F.round("relevance", 6))
 
 
-# Path-BFS memo: the driver re-derives the SAME PathIndex for several
-# queries over the memoized graph (features, negatives, paths); keyed by
-# the identity of the (cached) triples DataFrame so distinct graphs never
-# collide. Values hold the DF reference, keeping id() stable.
-_PATHS_MEMO: dict[tuple, tuple[DataFrame, "PathIndex"]] = {}
-
-
 def enumerate_paths(
-    triples: DataFrame,
-    R: int,
-    min_sup: int = MIN_SUP,
-    max_nnz: int = MAX_NNZ,
-    max_depth: int = 2,
-    max_paths_per_level: int | None = None,
-    path_selection_mode: str = "inter",
-    domains: dict[int, str] | None = None,
-    ranges: dict[int, str] | None = None,
-) -> PathIndex:
-    key = (id(triples), R, min_sup, max_nnz, max_depth, max_paths_per_level,
-           path_selection_mode,
-           tuple(sorted((domains or {}).items())),
-           tuple(sorted((ranges or {}).items())))
-    hit = _PATHS_MEMO.get(key)
-    if hit is not None and hit[0] is triples:
-        return hit[1]
-    idx = _enumerate_paths(triples, R, min_sup, max_nnz, max_depth,
-                           max_paths_per_level, path_selection_mode,
-                           domains, ranges)
-    _PATHS_MEMO[key] = (triples, idx)
-    return idx
-
-
-def _enumerate_paths(
     triples: DataFrame,
     R: int,
     min_sup: int = MIN_SUP,

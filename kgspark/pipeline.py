@@ -52,6 +52,17 @@ class Graph:
                 self.entities, self.triples, self.relations)[1],
             deps=["types"])
 
+    @property
+    def paths(self):
+        """The path index (``patybred.enumerate_paths`` at its defaults)
+        of the clean encoded triples."""
+        from kgspark import patybred
+
+        return self.store.derived(
+            "triples_paths",
+            lambda: patybred.enumerate_paths(self.triples, self.n_relations),
+            deps=["triples"])
+
 
 @dataclass
 class Detection:

@@ -22,6 +22,22 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def checkpointed(spark, monkeypatch):
+    """The columns of every frame ``localCheckpoint``ed while the test
+    runs, one tuple per call (``clear()`` it to start a new count)."""
+    engine = type(spark.range(1))
+    calls = []
+    orig = engine.localCheckpoint
+
+    def spy(self, *a, **kw):
+        calls.append(tuple(self.columns))
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(engine, "localCheckpoint", spy)
+    return calls
+
+
 @contextmanager
 def conf_set(spark, key: str, value: str):
     """Set one session conf for the block, then restore it."""

@@ -176,25 +176,16 @@ def test_parquet_and_memory_stores_agree(spark, tmp_path):
         assert _same_metrics(got, want), (method, got, want)
 
 
-def test_memory_store_is_scoped_to_the_session(spark, monkeypatch):
+def test_memory_store_is_scoped_to_the_session(spark, checkpointed):
     """build_graph then pb_bundle on one session checkpoints each graph
     stage once (the bundle finds them under the same keys); a new
     session starts empty and runs the jobs again."""
-    engine = type(spark.range(1))
-    calls = []
-    orig = engine.localCheckpoint
-
-    def spy(self, *a, **kw):
-        calls.append(1)
-        return orig(self, *a, **kw)
-
-    monkeypatch.setattr(engine, "localCheckpoint", spy)
     jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
 
     def checkpoints(fn) -> int:
-        calls.clear()
+        checkpointed.clear()
         fn()
-        return len(calls)
+        return len(checkpointed)
 
     def bundle(session):
         return patybred.pb_bundle(session, SF_TINY, 0.05, clf="lgr", kind=3,
@@ -212,3 +203,26 @@ def test_memory_store_is_scoped_to_the_session(spark, monkeypatch):
     j0 = jobs()
     assert checkpoints(lambda: bundle(s2)) == graph + rest
     assert jobs() > j0
+
+
+def test_graph_paths_are_scoped_to_the_session(spark, monkeypatch):
+    """``Graph.paths`` is a store value: two driver queries over the clean
+    graph on one session share one path BFS, and a new session runs its
+    own."""
+    import __spark_entry__ as entry
+
+    bfs = []
+    orig = patybred.enumerate_paths
+
+    def spy(*a, **kw):
+        bfs.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(patybred, "enumerate_paths", spy)
+    qs = entry.queries()
+    s1 = spark.newSession()
+    qs["kg_paths_depth2"](s1, SF_TINY)
+    qs["kg_patybred_features"](s1, SF_TINY)
+    assert len(bfs) == 1
+    qs["kg_paths_depth2"](spark.newSession(), SF_TINY)
+    assert len(bfs) == 2

@@ -90,7 +90,7 @@ def test_shacl_constraint_export(spark, graph):
     the reference's output shape (shacl-sparql.py analog)."""
     from kgspark import constraints, patybred
 
-    idx = patybred.enumerate_paths(graph.triples, 4)
+    idx = graph.paths
     models = patybred.fit_models(graph.triples, idx, graph.types,
                                  graph.n_entities)
     doc = constraints.compile_shacl(models, graph.relations, graph.type_names)
@@ -143,7 +143,7 @@ def test_domain_range_path_pruning(spark, graph):
     for a, b in d2:
         assert dr(a)[1] == dr(b)[0], (a, b)
     # and pruning is strictly tighter than the untyped BFS
-    untyped = patybred.enumerate_paths(graph.triples, 4)
+    untyped = graph.paths
     assert len(d2) <= sum(1 for p in untyped.paths if len(p) == 2)
 
 

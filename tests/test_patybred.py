@@ -16,7 +16,7 @@ def graph(spark):
 
 @pytest.fixture(scope="module")
 def idx(graph):
-    return patybred.enumerate_paths(graph.triples, 4)
+    return graph.paths
 
 
 @pytest.fixture(scope="module")
@@ -444,7 +444,7 @@ def test_domran_prune_fires_at_candidate_level(spark, graph):
 
     R = graph.relations.count()
     dom, ran = hierarchy.domain_range_ids(graph.relations)
-    idx_all = patybred.enumerate_paths(graph.triples, R)
+    idx_all = graph.paths
     idx_pruned = patybred.enumerate_paths(graph.triples, R,
                                           domains=dom, ranges=ran)
     assert idx_pruned.supports == idx_all.supports
